@@ -3,7 +3,7 @@
 Nothing here knows a workload. It provides: the run environment record
 (core count, versions, load average, CPU steal), latency statistics, input
 digests, spans for the traced run, Spark job, stage and task counts and
-task metrics from the event log, and the JVM shutdown that lets a run end
+task metrics from the event log per operation, and the JVM shutdown that lets a run end
 with no process left behind.
 """
 
@@ -100,6 +100,15 @@ def digest_parquet(paths: list[str]) -> str:
     return h.hexdigest()
 
 
+def digest_files(paths: list[str]) -> str:
+    """sha256 over the bytes of the files ``paths``, in order."""
+    h = hashlib.sha256()
+    for p in paths:
+        with open(p, "rb") as f:
+            h.update(f.read())
+    return h.hexdigest()
+
+
 def spark_part_files(table_dir: str) -> list[str]:
     """Data files of a Spark-written table directory in part order."""
     names = [n for n in os.listdir(table_dir) if n.startswith("part-")]
@@ -187,45 +196,79 @@ EVENTLOG_CONF = {
     "spark.eventLog.rolling.enabled": "false",
 }
 
+# Job group of the traced run's timed operation i, and of its untimed checks.
+OP_GROUP = "perfbench-op-"
+UNTIMED_GROUP = "perfbench-untimed"
+
 JOB_KEYS = ("jobs", "stages", "tasks", "task_run_s", "task_cpu_s", "gc_s",
             "shuffle_bytes", "spill_bytes")
 
 
-def eventlog_jobs(log_dir: str) -> list[dict]:
-    """One record per Spark job in the event logs under ``log_dir``: its
-    submission time (epoch seconds), stage and task counts, and the task
-    metrics of its stages summed."""
-    jobs: list[dict] = []
+def _group(props: dict | None) -> str | None:
+    return (props or {}).get("spark.jobGroup.id")
+
+
+def eventlog_records(log_dir: str) -> list[dict]:
+    """The work Spark ran, from the event logs under ``log_dir``: one record
+    per job started, per stage attempt completed and per task ended. Each
+    has its job group (None when unset), its start (epoch seconds) and the
+    counts and task metrics it adds.
+
+    A job also lists the parent stages it skips because their shuffle output
+    exists already (with adaptive execution every shuffle map stage runs as
+    its own job first). Skipped stages are never submitted, so counting
+    completed stages and ended tasks counts only what ran."""
+    out: list[dict] = []
     for name in sorted(os.listdir(log_dir)):
-        stage_job: dict[int, dict] = {}  # stage ids restart per application
+        stage_group: dict[tuple[int, int], str | None] = {}  # ids restart per application
         with open(os.path.join(log_dir, name)) as f:
             for line in f:
                 ev = json.loads(line)
                 kind = ev.get("Event")
                 if kind == "SparkListenerJobStart":
-                    job = dict.fromkeys(JOB_KEYS, 0.0)
-                    job["jobs"] = 1
-                    job["submit"] = ev["Submission Time"] / 1e3
-                    job["stages"] = len(ev["Stage IDs"])
-                    job["tasks"] = sum(s["Number of Tasks"] for s in ev["Stage Infos"])
-                    for sid in ev["Stage IDs"]:
-                        stage_job.setdefault(sid, job)
-                    jobs.append(job)
-                elif kind == "SparkListenerTaskEnd" and ev.get("Task Metrics"):
-                    job = stage_job.get(ev["Stage ID"])
-                    if job is None:
-                        continue
-                    m = ev["Task Metrics"]
-                    job["task_run_s"] += m.get("Executor Run Time", 0) / 1e3
-                    job["task_cpu_s"] += m.get("Executor CPU Time", 0) / 1e9
-                    job["gc_s"] += m.get("JVM GC Time", 0) / 1e3
-                    job["shuffle_bytes"] += (m.get("Shuffle Write Metrics") or {}).get(
-                        "Shuffle Bytes Written", 0
-                    )
-                    job["spill_bytes"] += m.get("Memory Bytes Spilled", 0) + m.get(
-                        "Disk Bytes Spilled", 0
-                    )
-    return jobs
+                    out.append({"group": _group(ev.get("Properties")),
+                                "start": ev["Submission Time"] / 1e3, "jobs": 1})
+                elif kind == "SparkListenerStageSubmitted":
+                    info = ev["Stage Info"]
+                    stage_group[info["Stage ID"], info["Stage Attempt ID"]] = _group(ev.get("Properties"))
+                elif kind == "SparkListenerStageCompleted":
+                    info = ev["Stage Info"]
+                    out.append({"group": stage_group.get((info["Stage ID"], info["Stage Attempt ID"])),
+                                "start": info["Submission Time"] / 1e3, "stages": 1})
+                elif kind == "SparkListenerTaskEnd":
+                    m = ev.get("Task Metrics") or {}
+                    out.append({
+                        "group": stage_group.get((ev["Stage ID"], ev["Stage Attempt ID"])),
+                        "start": ev["Task Info"]["Launch Time"] / 1e3,
+                        "tasks": 1,
+                        "task_run_s": m.get("Executor Run Time", 0) / 1e3,
+                        "task_cpu_s": m.get("Executor CPU Time", 0) / 1e9,
+                        "gc_s": m.get("JVM GC Time", 0) / 1e3,
+                        "shuffle_bytes": (m.get("Shuffle Write Metrics") or {}).get("Shuffle Bytes Written", 0),
+                        "spill_bytes": m.get("Memory Bytes Spilled", 0) + m.get("Disk Bytes Spilled", 0),
+                    })
+    return out
+
+
+def per_op_totals(records: list[dict], intervals: list[tuple[float, float]]) -> list[dict]:
+    """``records`` summed per timed operation. A record of an operation's job
+    group belongs to it; one of another group than the benchmark's (a
+    stream's jobs run on its own thread, under its own group) belongs to the
+    operation whose interval holds its start; untimed checks count nowhere."""
+    totals = [dict.fromkeys(JOB_KEYS, 0.0) for _ in intervals]
+    for r in records:
+        g = r["group"] or ""
+        if g.startswith(OP_GROUP):
+            i = int(g[len(OP_GROUP):])
+        elif g == UNTIMED_GROUP:
+            continue
+        else:
+            i = next((k for k, (a, b) in enumerate(intervals) if a <= r["start"] <= b), None)
+        if i is None or i >= len(totals):
+            continue
+        for k in JOB_KEYS:
+            totals[i][k] += r.get(k, 0)
+    return totals
 
 
 def stop_jvm() -> None:

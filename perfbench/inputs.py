@@ -1,24 +1,25 @@
-"""Seeded inputs. The program under test sees only what these functions
-stage; the same (seed, size, core count) stages the same rows."""
+"""Inputs. The program under test sees only what these functions stage. The
+voting star and the vote events are generated from the seed, and the same
+(seed, size, core count) stages the same rows; the registry sample reads
+fixed test tables."""
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 
 import numpy as np
 import pandas as pd
-import pyarrow as pa
-import pyarrow.parquet as pq
 
-from harness import digest_parquet, spark_part_files
+from harness import spark_part_files
 
 STAR_TABLES = ("candidate", "voter", "vote")
 
 
-def stage_star(spark, root: str, n_voters: int, seed: int) -> str:
+def stage_star(spark, root: str, n_voters: int, seed: int) -> list[str]:
     """Write ``generator.generate_star`` as parquet tables
-    ``root/<name>.parquet`` and return the digest of their bytes.
+    ``root/<name>.parquet``; return their data files.
 
     ``generate_star`` draws ``F.rand`` per partition and takes its partition
     count from ``defaultParallelism``, so the bytes depend on local[N] too;
@@ -31,7 +32,7 @@ def stage_star(spark, root: str, n_voters: int, seed: int) -> str:
         path = os.path.join(root, f"{name}.parquet")
         tables[name].write.mode("overwrite").parquet(path)
         files += spark_part_files(path)
-    return digest_parquet(files)
+    return files
 
 
 def vote_event_batches(
@@ -91,86 +92,21 @@ def vote_event_batches(
     return lines, meta
 
 
-# --- registry tables (schemas.TESTDATA_SCHEMAS, read by plans.parity) -----
+# --- registry tables ------------------------------------------------------
 
-_VOCAB = (
-    "join hash row batch scan column customer filter small slow merge order "
-    "vector line table data agg value key stream window a spark part group "
-    "big sort query fast the"
-).split()
-_LANGS = ("en", "zh", "es", "de", "fr")
-_LANG_P = (0.44, 0.14, 0.14, 0.14, 0.14)
-
-
-def _documents(rng, n: int) -> pa.Table:
-    texts: list[str] = []
-    for i in range(n):
-        if i > 10 and rng.random() < 0.1:
-            # near-duplicate of an earlier document: one word swapped + marker
-            words = texts[int(rng.integers(0, i))].split()
-            words[int(rng.integers(0, len(words)))] = _VOCAB[int(rng.integers(0, len(_VOCAB)))]
-            texts.append(" ".join(words + ["dup"]))
-        else:
-            k = int(rng.integers(8, 90))
-            texts.append(" ".join(rng.choice(_VOCAB, k)))
-    return pa.table(
-        {
-            "doc_id": pa.array(np.arange(n, dtype=np.int64)),
-            "text": texts,
-            "lang": rng.choice(_LANGS, n, p=_LANG_P).tolist(),
-            "source": [f"src{i % 20}" for i in range(n)],
-            "n_chars": pa.array([len(t) for t in texts], pa.int64()),
-        }
-    )
-
-
-def _embeddings(rng, n: int, dim: int = 64) -> pa.Table:
-    e = rng.standard_normal((n, dim)).astype(np.float32)
-    e /= np.linalg.norm(e, axis=1, keepdims=True)
-    return pa.table(
-        {
-            "vec_id": pa.array(np.arange(n, dtype=np.int64)),
-            "embedding": pa.array(list(e), pa.list_(pa.float32())),
-            "label": pa.array(rng.integers(0, 10, n).astype(np.int32)),
-        }
-    )
-
-
-def _lineitem(rng, n: int) -> pa.Table:
-    n_orders = max(1, n // 4)
-    ship = np.datetime64("1995-01-02") + rng.integers(0, 2498, n).astype("timedelta64[D]")
-    return pa.table(
-        {
-            "l_orderkey": pa.array(rng.integers(0, n_orders, n), pa.int64()),
-            "l_partkey": pa.array(rng.integers(0, max(1, n // 30), n), pa.int64()),
-            "l_suppkey": pa.array(rng.integers(0, max(1, n // 600), n), pa.int64()),
-            "l_linenumber": pa.array(rng.integers(1, 8, n).astype(np.int32)),
-            "l_quantity": rng.integers(1, 51, n).astype(np.float64),
-            "l_extendedprice": np.round(rng.uniform(900, 105000, n), 2),
-            "l_discount": rng.integers(0, 11, n) / 100.0,
-            "l_tax": rng.integers(0, 9, n) / 100.0,
-            "l_returnflag": rng.choice(["A", "N", "R"], n).tolist(),
-            "l_linestatus": rng.choice(["O", "F"], n).tolist(),
-            "l_shipdate": pa.array(ship.astype("datetime64[us]"), pa.timestamp("us")),
-        }
-    )
-
-
+# The sf0.001 test tables (TESTDATA.md: the deterministic TPC-H-like tables the
+# registered queries and their DuckDB oracles are written against), as
+# committed here: only the three the sampled queries read.
+REGISTRY_DATA = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data", "sf0.001")
 REGISTRY_TABLES = ("documents", "embeddings", "lineitem")
 
 
-def stage_registry_tables(root: str, n_docs: int, n_vecs: int, n_lineitems: int, seed: int) -> str:
-    """Write the three tables the registry sample reads as
-    ``root/<name>.parquet`` and return the digest of their bytes."""
-    rng = np.random.default_rng(seed)
-    tables = {
-        "documents": _documents(rng, n_docs),
-        "embeddings": _embeddings(rng, n_vecs),
-        "lineitem": _lineitem(rng, n_lineitems),
-    }
+def stage_registry_tables(root: str) -> list[str]:
+    """Copy the registry sample's tables to ``root/<name>.parquet``; return
+    the copies' paths."""
     paths = []
     for name in REGISTRY_TABLES:
         path = os.path.join(root, f"{name}.parquet")
-        pq.write_table(tables[name], path)
+        shutil.copyfile(os.path.join(REGISTRY_DATA, f"{name}.parquet"), path)
         paths.append(path)
-    return digest_parquet(paths)
+    return paths

@@ -1,6 +1,6 @@
 """Benchmark entry point.
 
-    python3 perfbench/run.py --workload dashboard_refresh --seed 1 --seconds 8 --trace 0
+    python3 perfbench/run.py --workload dashboard_refresh --seed 1 --seconds 10 --trace 0
 
 Run from the root of a checkout. Prints progress to stderr and, as the last
 line of stdout, one JSON object with ``correct``, ``attempted``, ``failed``
@@ -28,8 +28,6 @@ sys.path.insert(0, ROOT)
 import harness  # noqa: E402
 from harness import log  # noqa: E402
 
-# Set-ups per run; setup_s is the median of their times plus the warm-up.
-SETUP_REPS = 3
 # local[N]: at most this many cores, so hosts with more cores measure alike.
 MAX_CORES = 4
 
@@ -41,10 +39,9 @@ END_TO_END = {
 }
 
 # Input sizes; SMOKE is the self-test's tiny variant of each.
-DASHBOARD_VOTERS = {"full": 100_000, "smoke": 1_000}
+DASHBOARD_VOTERS = {"full": 50_000, "smoke": 1_000}
 # events per batch file, batch files staged, of which warm-up batches
 LIVE = {"full": (1_000, 16, 4), "smoke": (200, 4, 1)}
-REGISTRY_TABLES = {"n_docs": 500, "n_vecs": 500, "n_lineitems": 6_000}
 SMOKE_REGISTRY_QUERIES = ("text_tfidf",)
 
 
@@ -57,8 +54,8 @@ def make_workload(name: str, seed: int, smoke: bool):
     if name == "live_votes":
         return workloads.LiveVotes(seed, *LIVE[size])
     if smoke:
-        return workloads.RegistrySample(seed, **REGISTRY_TABLES, queries=SMOKE_REGISTRY_QUERIES)
-    return workloads.RegistrySample(seed, **REGISTRY_TABLES)
+        return workloads.RegistrySample(seed, queries=SMOKE_REGISTRY_QUERIES)
+    return workloads.RegistrySample(seed)
 
 
 def layer_metric_units() -> dict[str, str]:
@@ -81,6 +78,7 @@ def layer_metric_units() -> dict[str, str]:
     for q in REGISTRY_SAMPLE:
         units[f"parity.{q}.call_s"] = "s"
         units[f"parity.{q}.action_s"] = "s"
+    units["parity.retries"] = "count"
     units["process.peak_rss_mb"] = "MB"
     units["host.steal_s"] = "s"
     return units
@@ -140,40 +138,29 @@ def run(args, base: str, work: str) -> int:
     tracer = harness.Tracer(enabled=bool(args.trace))
     problems: list[str] = []
 
-    # --- set-up, several times; the last one's session and inputs are used
-    reps, stage_times, digests = [], [], []
-    spark = None
-    for r in range(SETUP_REPS):
-        t0 = time.perf_counter()
-        if spark is not None:
-            wl.close()
-            spark.stop()
-            t0 = time.perf_counter()
-        spark = new_session()
-        root = os.path.join(work, f"input{r}")
-        os.makedirs(root)
-        t1 = time.perf_counter()
-        digests.append(wl.stage(spark, root))
-        stage_times.append(time.perf_counter() - t1)
-        # the first set-up also pays for interpreter, imports and JVM launch
-        reps.append(harness.process_age_s() if r == 0 else time.perf_counter() - t0)
-        log(f"set-up {r}: {reps[-1]:.2f} s (staging {stage_times[-1]:.2f} s)")
-        if r > 0:
-            shutil.rmtree(os.path.join(work, f"input{r - 1}"))
+    # --- set-up: session, inputs, warm-up
+    spark = new_session()
+    root = os.path.join(work, "input")
+    os.makedirs(root)
+    t0 = time.perf_counter()
+    wl.stage(spark, root)
+    stage_s = time.perf_counter() - t0
+    t0 = time.perf_counter()
+    digest = wl.digest()
+    digest_s = time.perf_counter() - t0
     env = {"nproc": harness.cpu_count(), "cores_used": cores, **versions(spark)}
-    if len(set(digests)) != 1:
-        problems.append(f"set-ups staged different inputs: {digests}")
     digest_key = f"{args.workload}|seed={args.seed}|N={cores}|{wl.size}"
-    prior = harness.DigestBook(os.path.join(base, "digests.json")).check(digest_key, digests[-1])
+    prior = harness.DigestBook(os.path.join(base, "digests.json")).check(digest_key, digest)
     if prior is not None:
-        problems.append(f"input digest {digests[-1]} differs from an earlier run's {prior}")
+        problems.append(f"input digest {digest} differs from an earlier run's {prior}")
 
     t0 = time.perf_counter()
     checking_s = wl.warm_up(spark, tracer)
     warm_up_s = time.perf_counter() - t0 - checking_s
-    setup_s = statistics.median(reps) + warm_up_s
-    setup_cold_s = harness.process_age_s()
-    log(f"warm-up {warm_up_s:.2f} s; setup_s {setup_s:.2f} s")
+    # from process start (interpreter, imports, JVM and session launch,
+    # staging, warm-up), less the benchmark's own digest and result checks
+    setup_s = harness.process_age_s() - digest_s - checking_s
+    log(f"staging {stage_s:.2f} s; warm-up {warm_up_s:.2f} s; setup_s {setup_s:.2f} s")
 
     # --- timed phase: closed loop, one client
     latencies, intervals, failed = [], [], set()
@@ -182,6 +169,8 @@ def run(args, base: str, work: str) -> int:
     i = 0
     while True:
         tracer.op = i
+        if args.trace:
+            spark.sparkContext.setJobGroup(f"{harness.OP_GROUP}{i}", "timed operation")
         w0, t0 = time.time(), time.perf_counter()
         try:
             units += wl.op(spark, tracer, i)
@@ -189,10 +178,12 @@ def run(args, base: str, work: str) -> int:
             traceback.print_exc()
             failed.add(i)
         latencies.append(time.perf_counter() - t0)
-        intervals.append((w0, time.time()))
         tracer.op = None
+        if args.trace:
+            spark.sparkContext.setJobGroup(harness.UNTIMED_GROUP, "untimed check")
         if not wl.after_op(spark, i):
             failed.add(i)
+        intervals.append((w0, time.time()))
         i += 1
         if wl.stop(i, time.perf_counter() - timed_start >= args.seconds):
             break
@@ -227,9 +218,9 @@ def run(args, base: str, work: str) -> int:
         "host_before": host_before,
         "host_after": host_after,
         "host_steal_s": host_after["steal_s"] - host_before["steal_s"],
-        "input_digest": digests[-1],
-        "setup": {"reps_s": reps, "stage_s": stage_times, "warm_up_s": warm_up_s,
-                  "setup_cold_s": setup_cold_s},
+        "input_digest": digest,
+        "setup": {"setup_s": setup_s, "stage_s": stage_s, "digest_s": digest_s,
+                  "warm_up_s": warm_up_s, "checking_s": checking_s},
         "latency": lat,
         "latencies_s": latencies,
         "timed_s": timed_s,
@@ -245,15 +236,13 @@ def run(args, base: str, work: str) -> int:
     if args.trace:
         layers = {k: 0.0 for k in layer_metric_units()}
         layers.update(wl.layers(tracer, ops))
-        jobs = harness.eventlog_jobs(os.path.join(work, "eventlog"))
-        per_op = []
-        for a, b in intervals:
-            mine = [j for j in jobs if a <= j["submit"] <= b]
-            per_op.append({k: sum(j[k] for j in mine) for k in harness.JOB_KEYS})
+        records = harness.eventlog_records(os.path.join(work, "eventlog"))
+        per_op = harness.per_op_totals(records, intervals)
         for k in harness.JOB_KEYS:
             layers[f"spark.{k}"] = statistics.median(p[k] for p in per_op)
+        record["spark_per_op"] = per_op
         if wl.uses_generator:
-            layers["generator.stage_s"] = statistics.median(stage_times)
+            layers["generator.stage_s"] = stage_s
         layers["process.peak_rss_mb"] = peak_rss
         layers["host.steal_s"] = record["host_steal_s"]
         record["layers"] = layers

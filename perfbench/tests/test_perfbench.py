@@ -4,8 +4,10 @@ working directory.
     python -m pytest perfbench/tests -q
 
 Checks that the printed metric names and units are the ones BENCHMARK.json
-declares, that clean runs are correct, and that a deliberately perturbed
-result is counted as a failed operation (error_rate above zero).
+declares, that clean runs are correct, that a deliberately perturbed result
+is counted as a failed operation (error_rate above zero), that one seed
+stages the same inputs twice, and that Spark stages and tasks are counted
+from what ran.
 """
 
 from __future__ import annotations
@@ -78,8 +80,8 @@ def test_perturbed_result_is_a_failure(tmp_path, workload):
 
 
 def test_same_seed_stages_same_digest(tmp_path):
-    _, first = _run(str(tmp_path), "registry_sample")
-    result, second = _run(str(tmp_path), "registry_sample")
+    _, first = _run(str(tmp_path), "dashboard_refresh")
+    result, second = _run(str(tmp_path), "dashboard_refresh")
     assert result["correct"]  # a differing digest for the same key would fail the run
     assert first["input_digest"] == second["input_digest"]
 
@@ -89,6 +91,39 @@ def test_digest_book_flags_changed_inputs(tmp_path):
     assert book.check("k", "a") is None
     assert book.check("k", "a") is None
     assert book.check("k", "b") == "a"
+
+
+def test_eventlog_counts_only_what_ran(tmp_path):
+    """A job that reuses a shuffle lists the stage that wrote it but skips
+    it: its stages and tasks must not be counted again."""
+    from pyspark.sql import SparkSession
+
+    log_dir = tmp_path / "eventlog"
+    log_dir.mkdir()
+    builder = SparkSession.builder.master("local[2]").appName("perfbench-eventlog-test")
+    for k, v in {**harness.EVENTLOG_CONF, "spark.eventLog.dir": str(log_dir),
+                 "spark.ui.enabled": "false"}.items():
+        builder = builder.config(k, v)
+    spark = builder.getOrCreate()
+    try:
+        sc = spark.sparkContext
+        rdd = sc.parallelize(range(100), 4).map(lambda x: (x % 3, 1)).reduceByKey(
+            lambda a, b: a + b, 2)
+        sc.setJobGroup(f"{harness.OP_GROUP}0", "map and reduce stages")
+        assert rdd.count() == 3
+        sc.setJobGroup(f"{harness.OP_GROUP}1", "reduce stage only")
+        assert rdd.count() == 3
+    finally:
+        harness.stop_jvm()
+
+    events = [json.loads(line) for f in log_dir.iterdir() for line in f.open()]
+    listed = [len(e["Stage IDs"]) for e in events if e["Event"] == "SparkListenerJobStart"]
+    assert listed == [2, 2]  # the second job lists the stage it skips
+    task_ends = sum(e["Event"] == "SparkListenerTaskEnd" for e in events)
+
+    per_op = harness.per_op_totals(harness.eventlog_records(str(log_dir)), [(0, 0), (0, 0)])
+    assert [(p["jobs"], p["stages"], p["tasks"]) for p in per_op] == [(1, 2, 6), (1, 1, 2)]
+    assert sum(p["tasks"] for p in per_op) == task_ends
 
 
 def test_latency_tail():

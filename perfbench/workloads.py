@@ -1,41 +1,37 @@
-"""The three workloads. Each one stages seeded inputs, warms up, runs one
+"""The three workloads. Each one stages its inputs, warms up, runs one
 operation at a time (closed loop, one client) and checks its outputs."""
 
 from __future__ import annotations
 
+import contextlib
+import io
 import json
 import os
 import random
 import statistics
+import sys
 import time
 
 import duckdb
 import pandas as pd
 
+import harness
 import inputs
+from harness import log
+from tests.oracle import assert_frames_match
 
 # --- output comparison -------------------------------------------------------
 
 
-def _normalize(df: pd.DataFrame) -> pd.DataFrame:
-    df = df[sorted(df.columns)].copy()
-    for c in df.columns:
-        k = df[c].dtype.kind
-        if k in "iu":
-            df[c] = df[c].astype("int64")
-        elif k == "f":
-            df[c] = df[c].astype("float64")
-        elif k == "M":
-            df[c] = df[c].astype("datetime64[us]")
-    return df.sort_values(by=list(df.columns), ignore_index=True)
-
-
-def frames_equal(actual: pd.DataFrame, expected: pd.DataFrame) -> bool:
-    """Same columns, rows and values, in any row order; floats bitwise
-    (the engine's determinism contract), timestamps at microseconds."""
-    if sorted(actual.columns) != sorted(expected.columns) or len(actual) != len(expected):
+def matches(actual: pd.DataFrame, expected: pd.DataFrame, name: str) -> bool:
+    """The repository's oracle compare (``tests/oracle.py``) as a bool; the
+    first mismatch is logged."""
+    try:
+        assert_frames_match(actual, expected, name)
+    except AssertionError as exc:
+        log(f"mismatch: {exc}")
         return False
-    return _normalize(actual).equals(_normalize(expected))
+    return True
 
 
 def perturbed(df: pd.DataFrame) -> pd.DataFrame:
@@ -70,8 +66,12 @@ class Workload:
         self.drain_s: dict[int, float] = {}  # op -> untimed wait that still counts as busy
         self.batches: dict[int, dict] | None = None  # op -> stream progress records
 
-    def stage(self, spark, root: str) -> str:
-        """Write the inputs under ``root``; return their digest."""
+    def stage(self, spark, root: str) -> None:
+        """Write the inputs under ``root``."""
+        raise NotImplementedError
+
+    def digest(self) -> str:
+        """Digest of the staged inputs."""
         raise NotImplementedError
 
     def warm_up(self, spark, tracer) -> float:
@@ -122,7 +122,10 @@ class DashboardRefresh(Workload):
 
     def stage(self, spark, root):
         self.root = root
-        return inputs.stage_star(spark, root, self.n_voters, self.seed)
+        self.files = inputs.stage_star(spark, root, self.n_voters, self.seed)
+
+    def digest(self):
+        return harness.digest_parquet(self.files)
 
     def _refresh(self, spark, tracer) -> dict[str, pd.DataFrame]:
         from realtime_voting_system_spark import catalog
@@ -159,7 +162,7 @@ class DashboardRefresh(Workload):
         oracle = {q: con.sql(sql).df() for q, sql in VOTING_ORACLE_SQL.items()}
         bad = {}
         for i, frames in self.frames.items():
-            wrong = [q for q, want in oracle.items() if not frames_equal(frames[q], want)]
+            wrong = [q for q, want in oracle.items() if not matches(frames[q], want, q)]
             if wrong:
                 bad[i] = f"refresh {i}: {', '.join(wrong)} differ from the DuckDB oracle"
         return bad
@@ -203,8 +206,6 @@ class LiveVotes(Workload):
         self.check_failures: dict[int, str] = {}
 
     def stage(self, spark, root):
-        import hashlib
-
         self.root = root
         self.lines, self.meta = inputs.vote_event_batches(
             spark, self.n_batches, self.batch_size, self.dup_share, self.seed
@@ -213,13 +214,14 @@ class LiveVotes(Workload):
         self.watch = os.path.join(root, "events")
         os.makedirs(self.pending)
         os.makedirs(self.watch)
-        h = hashlib.sha256()
+        self.files = []
         for b, lines in enumerate(self.lines):
-            body = ("\n".join(lines) + "\n").encode()
-            h.update(body)
-            with open(os.path.join(self.pending, f"batch-{b:05d}.json"), "wb") as f:
-                f.write(body)
-        return h.hexdigest()
+            self.files.append(os.path.join(self.pending, f"batch-{b:05d}.json"))
+            with open(self.files[-1], "w") as f:
+                f.write("\n".join(lines) + "\n")
+
+    def digest(self):
+        return harness.digest_files(self.files)
 
     def _start(self, spark):
         from realtime_voting_system_spark.schemas import VOTE_EVENT
@@ -274,7 +276,7 @@ class LiveVotes(Workload):
             got = spark.table(f"bench_{a}").toPandas()
             if self.perturb and i == 0:
                 got = perturbed(got)
-            if not frames_equal(got, want[a]):
+            if not matches(got, want[a], a):
                 return f"{a} differs from the recount after {self.published} batches"
         return None
 
@@ -377,29 +379,47 @@ REGISTRY_SAMPLE = (
     "text_tfidf",  # operators.textops
     "sim_ann_ivf",  # operators.similarity
     "g6_label_propagation",  # plans.graph_ops
+    "st2_pyds_votes_per_candidate",  # sources.pyds
 )
+
+
+class _RetryCounter(io.TextIOBase):
+    """stderr, passed through, counting the lines in which the registry's
+    wrapper announces that it reruns a streaming gate."""
+
+    MARK = "retrying once"
+
+    def __init__(self, target):
+        self.target, self.count = target, 0
+
+    def write(self, s):
+        self.count += s.count(self.MARK)
+        return self.target.write(s)
+
+    def flush(self):
+        self.target.flush()
 
 
 class RegistrySample(Workload):
     """Heavy registered operators (``plans.parity`` → ``operators.*``,
-    ``plans.graph_ops``). An operation is one pass over the sample, each query
-    being the registered call plus a ``noop`` write; the seed permutes the
-    order of every pass. The warm-up pass fetches every query with
-    ``toPandas()`` and compares it with its DuckDB oracle.
+    ``plans.graph_ops``, ``sources.pyds``) on the sf0.001 test tables. An
+    operation is one pass over the sample, each query being the registered
+    call plus a ``noop`` write; the seed permutes the order of every pass.
+    The warm-up pass fetches every query with ``toPandas()`` and compares it
+    with its DuckDB oracle.
 
-    A pass, not a query, is the operation: the median of five unlike queries
-    is whichever query happens to sort third, and it flipped between two of
-    them from run to run."""
+    A pass, not a query, is the operation: the median of unlike queries is
+    whichever query happens to sort in the middle, and it flipped between two
+    of them from run to run."""
 
-    def __init__(self, seed: int, n_docs: int, n_vecs: int, n_lineitems: int,
-                 queries: tuple[str, ...] = REGISTRY_SAMPLE):
+    def __init__(self, seed: int, queries: tuple[str, ...] = REGISTRY_SAMPLE):
         super().__init__()
-        self.seed, self.n_docs, self.n_vecs, self.n_lineitems = seed, n_docs, n_vecs, n_lineitems
-        self.size = f"docs={n_docs},vecs={n_vecs},lineitems={n_lineitems},q={len(queries)}"
-        self.queries = queries
+        self.seed, self.queries = seed, queries
+        self.size = f"tables=sf0.001,q={len(queries)}"
         self.rng = random.Random(seed)
         self.wrong: list[str] = []
         self.passes = 0
+        self.stderr = _RetryCounter(sys.stderr)
 
     def _permuted(self) -> list[str]:
         order = list(self.queries)
@@ -408,7 +428,10 @@ class RegistrySample(Workload):
 
     def stage(self, spark, root):
         self.root = root
-        return inputs.stage_registry_tables(root, self.n_docs, self.n_vecs, self.n_lineitems, self.seed)
+        self.files = inputs.stage_registry_tables(root)
+
+    def digest(self):
+        return harness.digest_files(self.files)
 
     def warm_up(self, spark, tracer) -> float:
         from realtime_voting_system_spark.plans import parity
@@ -416,11 +439,14 @@ class RegistrySample(Workload):
         con = duck(self.root, inputs.REGISTRY_TABLES)
         oracle_s = 0.0
         for q in self._permuted():
-            got = parity.QUERIES[q](spark, self.root).toPandas()
+            t0 = time.perf_counter()
+            with contextlib.redirect_stderr(self.stderr):
+                got = parity.QUERIES[q](spark, self.root).toPandas()
+            log(f"warm-up {q}: {time.perf_counter() - t0:.2f} s")
             t0 = time.perf_counter()
             if self.perturb:
                 got = perturbed(got)
-            if not frames_equal(got, con.sql(parity.ORACLE_SQL[q]).df()):
+            if not matches(got, con.sql(parity.ORACLE_SQL[q]).df(), q):
                 self.wrong.append(q)
             oracle_s += time.perf_counter() - t0
         return oracle_s
@@ -428,11 +454,12 @@ class RegistrySample(Workload):
     def op(self, spark, tracer, i):
         from realtime_voting_system_spark.plans import parity
 
-        for q in self._permuted():
-            with tracer.span("parity.call"), tracer.span(f"parity.{q}.call"):
-                df = parity.QUERIES[q](spark, self.root)
-            with tracer.span("parity.action"), tracer.span(f"parity.{q}.action"):
-                df.write.format("noop").mode("overwrite").save()
+        with contextlib.redirect_stderr(self.stderr):
+            for q in self._permuted():
+                with tracer.span("parity.call"), tracer.span(f"parity.{q}.call"):
+                    df = parity.QUERIES[q](spark, self.root)
+                with tracer.span("parity.action"), tracer.span(f"parity.{q}.action"):
+                    df.write.format("noop").mode("overwrite").save()
         self.passes = i + 1
         return len(self.queries)
 
@@ -445,7 +472,7 @@ class RegistrySample(Workload):
         return {i: msg for i in range(-1, self.passes)}
 
     def layers(self, tracer, ops):
-        out = {}
+        out = {"parity.retries": float(self.stderr.count)}
         for q in self.queries:
             out[f"parity.{q}.call_s"] = tracer.median_per_op(f"parity.{q}.call", ops)
             out[f"parity.{q}.action_s"] = tracer.median_per_op(f"parity.{q}.action", ops)
